@@ -15,6 +15,9 @@ from velesdb_spark.velesql.translator import Catalog
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
+# reserved, quoted and non-ASCII column names that every builder splicing
+# names into SQL text must accept
+ODD_NAMES = ["vec col", "a`b", "ñame", "current_date", "select"]
 
 
 @pytest.fixture(scope="session")

@@ -7,10 +7,58 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_DIR
+from tests.conftest import ODD_NAMES, SF_DIR
 from velesdb_spark.functions.bm25 import Bm25Index, tokenize_py
 
 K1, B = 1.2, 0.75
+
+
+def _scan_scores_columns(docs, counts: dict, id_col: str, text_col: str):
+    """Column-builder form of the BM25 scan plan: the reference that the
+    one-shot-SQL builder (bm25._scan_scores_sql) must match bit for bit.
+    Column names are backtick-quoted so F.col takes any name whole."""
+    from velesdb_spark.functions.bm25 import B as B_, K1 as K1_, tokenize
+    from velesdb_spark.functions.staging import stage
+
+    def col(name):
+        return F.col("`" + name.replace("`", "``") + "`")
+
+    base = (
+        docs.select(col(id_col).alias("_doc_id"),
+                    tokenize(col(text_col)).alias("_toks"))
+        .withColumn("_dl", F.size("_toks"))
+        .filter(F.col("_dl") > 0)  # empty docs are not indexed (bm25.rs:146-148)
+    )
+    terms = list(counts)
+
+    def _tf(term):
+        esc = term.replace("\\", "\\\\").replace("'", "\\'")
+        return F.expr(f"size(filter(_toks, x -> x = '{esc}'))")
+
+    base = base.withColumns({
+        f"_tf{i}": _tf(t) for i, t in enumerate(terms)})
+    base = stage(base.drop("_toks"))
+
+    stats = base.agg(
+        F.count("*").alias("n_docs"), F.avg("_dl").alias("avgdl"),
+        *[F.sum((F.col(f"_tf{i}") > 0).cast("long")).alias(f"_df{i}")
+          for i in range(len(terms))])
+
+    scored = base.crossJoin(F.broadcast(stats))
+    score = F.lit(0.0)
+    for i, t in enumerate(terms):
+        idf = F.log((F.col("n_docs") - F.col(f"_df{i}") + 0.5)
+                    / (F.col(f"_df{i}") + 0.5) + 1.0)
+        sat = (F.col(f"_tf{i}") * (K1_ + 1.0)) / (
+            F.col(f"_tf{i}")
+            + K1_ * (1.0 - B_ + B_ * F.col("_dl") / F.col("avgdl")))
+        score = score + F.when(F.col(f"_tf{i}") > 0,
+                               float(counts[t]) * idf * sat).otherwise(0.0)
+    return (
+        scored.withColumn("_bm25_score", score)
+        .filter(F.col("_bm25_score") > 0.0)
+        .select(F.col("_doc_id").alias(id_col), "_bm25_score")
+    )
 
 
 def ref_tokenize(text):
@@ -420,34 +468,53 @@ def test_staging_eviction_skips_aliased_plans(spark):
 
 def test_scan_scores_sql_fastpath_identity(spark):
     """The one-shot-SQL scan path (r12, guide §5) must be BIT-identical
-    to the Column-builder fallback for every query shape: same trees,
+    to the Column-builder reference for every query shape: same trees,
     same Python-folded constants, same left-assoc grouping (incl. the
-    parenthesized saturation quotient — * and / share precedence)."""
+    parenthesized saturation quotient — * and / share precedence) — on
+    plain and on odd column names, and for query text holding quotes."""
     import struct
 
     from velesdb_spark.functions import bm25 as B
     from velesdb_spark.functions.staging import release_staged
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    for q in ["spark query join", "alpha", "the spark spark window",
-              "data merge shuffle pipeline window batch"]:
+
+    def check(frame, q, id_col, text_col):
         counts: dict = {}
         for t in B.tokenize_py(q):
             counts[t] = counts.get(t, 0) + 1
         fast = sorted((r[0], struct.pack(">d", r[1])) for r in
-                      B._scan_scores_sql(docs, counts, "doc_id", "text")
+                      B._scan_scores_sql(frame, counts, id_col, text_col)
                       .collect())
         release_staged()
         slow = sorted((r[0], struct.pack(">d", r[1])) for r in
-                      B._scan_scores_columns(docs, counts, "doc_id", "text")
+                      _scan_scores_columns(frame, counts, id_col, text_col)
                       .collect())
         release_staged()
-        assert fast == slow
+        assert fast == slow, (q, id_col, text_col)
+        return fast
+
+    for q in ["spark query join", "alpha", "the spark spark window",
+              "data merge shuffle pipeline window batch"]:
+        check(docs, q, "doc_id", "text")
+    quoted = "spark's o'reilly \\window"
+    plain = check(docs, quoted, "doc_id", "text")
+    assert plain
+    # odd-name matrix: each name pair scores the same bits as the plain
+    # names did, through the quoted SQL path and the reference alike
+    for name in ODD_NAMES:
+        odd = docs.select(F.col("doc_id").alias(name),
+                          F.col("text").alias(name + " text"))
+        assert check(odd, quoted, name, name + " text") == plain, name
 
 
 def test_scan_scores_fallback_on_exotic_names(spark):
-    """Non-identifier column names must route to the Column fallback
-    (no SQL splicing reachable) and still score correctly."""
+    """Non-identifier column names are quoted into the one SQL builder
+    and still score correctly — bit-identical to the Column reference."""
+    import struct
+
+    from velesdb_spark.functions.staging import release_staged
+
     docs = (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
             .limit(50)
             .select(F.col("doc_id").alias("the id"),
@@ -457,3 +524,16 @@ def test_scan_scores_fallback_on_exotic_names(spark):
     out = bm25_scan_scores(docs, "spark", id_col="the id",
                            text_col="body text").collect()
     assert all(r["_bm25_score"] > 0 for r in out)
+    release_staged()
+    for name in ODD_NAMES:
+        odd = docs.select(F.col("`the id`").alias(name),
+                          F.col("`body text`").alias(name + "'s text"))
+        got = sorted((r[0], struct.pack(">d", r[1])) for r in
+                     bm25_scan_scores(odd, "spark", id_col=name,
+                                      text_col=name + "'s text").collect())
+        release_staged()
+        ref = sorted((r[0], struct.pack(">d", r[1])) for r in
+                     _scan_scores_columns(odd, {"spark": 1}, name,
+                                          name + "'s text").collect())
+        release_staged()
+        assert got == ref, name

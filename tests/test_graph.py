@@ -554,3 +554,30 @@ def test_shortest_paths_unreachable_absent_and_negative_rejected(spark):
     import pytest as _pt
     with _pt.raises(Exception, match="negative edge weight"):
         shortest_paths(bad, [1]).collect()
+
+
+def test_match_label_and_column_spelling(spark):
+    """Labels and node column names are spliced into SQL text through the
+    quoting helpers: a label holding a quote, a backslash or a backtick
+    filters exactly like the Column form, and odd node column names
+    hydrate without failing."""
+    from velesdb_spark.operators.graph import _node_filter
+    from velesdb_spark.velesql import ast
+
+    labels = ["O'Brien", "back\\slash", "tick`s", "Person"]
+    nodes = spark.createDataFrame(
+        [(i, [lbl], f"n{i}", i * 1.5) for i, lbl in enumerate(labels)],
+        "id bigint, labels array<string>, name string, `vec col` double")
+    for lbl in labels:
+        got = _node_filter(nodes, ast.NodePattern(labels=(lbl,)), None)
+        ref = nodes.filter(F.array_contains(F.col("labels"), lbl))
+        assert sorted(got.collect()) == sorted(ref.collect()) != [], lbl
+    edges = spark.createDataFrame(
+        [(100, 0, 3, "KNOWS"), (101, 3, 1, "KNOWS")],
+        "id bigint, src bigint, dst bigint, label string")
+    cat = Catalog()
+    cat.register("nodes", nodes.withColumnRenamed("name", "ñame"))
+    cat.register("edges", edges)
+    out = translate("MATCH (a:Person)-[:KNOWS]->(b) RETURN b.id AS bid, "
+                    "a.id AS aid", cat)
+    assert [(r.aid, r.bid) for r in out.collect()] == [(3, 1)]

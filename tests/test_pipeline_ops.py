@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from tests.conftest import ODD_NAMES
 from velesdb_spark.functions import decontam as dc
 from velesdb_spark.functions.sampling import epoch_shuffle, shuffle_key
 from velesdb_spark.functions.text_analysis import repetition_stats_df
@@ -458,6 +459,13 @@ def test_robust_outliers_manual(spark):
     assert all(i not in got for i in range(9))
     # constant group: no anomalies
     assert all(i not in got for i in (200, 201, 202))
+    # odd value-column names are quoted into the percentile SQL and
+    # score exactly like the plain name
+    for name in ODD_NAMES:
+        odd = df.withColumnRenamed("v", name)
+        assert {r.id: r.score
+                for r in robust_outliers(odd, name, "g", threshold=3.0)
+                .collect()} == got, name
 
 
 def test_robust_outliers_mad_zero_flags_any_deviation(spark):

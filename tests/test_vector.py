@@ -5,7 +5,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_DIR, assert_matches_oracle
+from tests.conftest import ODD_NAMES, SF_DIR, assert_matches_oracle
 from velesdb_spark.operators import topk
 from velesdb_spark.velesql.translator import translate
 
@@ -478,7 +478,7 @@ def test_double_array_lit_bit_identical_and_fallback(spark):
     """arraylit fast path (one parsed SQL expression) must be
     bit-identical to the per-element builder — repr() round-trips
     doubles exactly and Spark's double parser is correctly rounding —
-    and non-finite values must fall back rather than fail."""
+    and non-finite values (spelled as casts) must parse, not fail."""
     import math
     import random
 
@@ -493,7 +493,7 @@ def test_double_array_lit_bit_identical_and_fallback(spark):
         F.array(*[F.lit(float(x)) for x in vals]).alias("v")).first().v
     assert all(math.copysign(1, a) == math.copysign(1, b) and a == b
                for a, b in zip(fast, slow))
-    # non-finite: falls back to the per-element path, same values
+    # non-finite: CAST('Infinity' AS DOUBLE) etc. fold to the same values
     nf = [1.0, float("inf"), float("-inf"), float("nan")]
     got = spark.range(1).select(double_array_lit(nf).alias("v")).first().v
     assert got[0] == 1.0 and math.isinf(got[1]) and math.isinf(got[2]) \
@@ -565,15 +565,157 @@ def test_staged_score_sql_fastpath_identity(spark):
     assert bits([r.s0 for r in batch]) == bits([r.s0 for r in loop])
     assert bits([r.s1 for r in batch]) == bits([r.s1 for r in loop])
 
-    # non-identifier column name forces the Column-HOF fallback; it must
-    # produce the same bits as the fast path did on the plain name
+    # a non-identifier column name is quoted into the same SQL path; it
+    # must produce the same bits as the fast path did on the plain name
     weird = df.withColumnRenamed("vector", "vec col")
     got = D.staged_score(weird, "vec col", q, "cosine", "s") \
         .orderBy("id").select("s").collect()
     fast_plain = D.staged_score(df, "vector", q, "cosine", "s") \
         .orderBy("id").select("s").collect()
     assert bits([r.s for r in got]) == bits([r.s for r in fast_plain])
-    # non-finite query elements fall back without failing
+    # non-finite query elements are spelled as casts, without failing
     nf = D.staged_score(df, "vector", [float("nan")] * 16, "dot", "s") \
         .limit(1).select("s").collect()
     assert len(nf) == 1
+
+    # odd-name matrix: every scorer quotes the vector column, and each
+    # name scores bit-identically to the generic Column form on it
+    for name in ODD_NAMES:
+        odd = df.withColumnRenamed("vector", name)
+        vcol = F.col("`" + name.replace("`", "``") + "`")
+        for metric in ("cosine", "dot", "euclidean", "hamming"):
+            got = D.staged_score(odd, name, q, metric, "s") \
+                .orderBy("id").select("s").collect()
+            generic = odd.select(
+                "id", D.metric_score(vcol, double_array_lit(q),
+                                     metric).alias("s")) \
+                .orderBy("id").select("s").collect()
+            assert bits([r.s for r in got]) == \
+                bits([r.s for r in generic]), (name, metric)
+        n2 = odd.withColumn("_n2", D.doc_norm2(name))
+        got = D.staged_scores_batch(n2, name, [q, q2], "cosine",
+                                    ["s0", "s1"], norm2_col="_n2") \
+            .orderBy("id").select("s0", "s1").collect()
+        assert bits([r.s0 for r in got]) == bits([r.s0 for r in loop]), name
+        assert bits([r.s1 for r in got]) == bits([r.s1 for r in loop]), name
+
+
+def _same_bits(xs, ys):
+    """Bitwise float equality, with every NaN counted equal to NaN."""
+    import math
+    import struct
+
+    def key(v):
+        return "nan" if math.isnan(v) else struct.pack("<d", v)
+
+    return [key(v) for v in xs] == [key(v) for v in ys]
+
+
+def test_staged_score_nonfinite_query_matches_metric_score(spark):
+    """Query vectors holding inf, -inf or nan have no SQL literal form;
+    the scorers spell them as casts and must score every row exactly as
+    the generic Column form does."""
+    import random
+
+    from velesdb_spark.functions import distance as D
+    from velesdb_spark.functions.arraylit import double_array_lit
+
+    rng = random.Random(17)
+    rows = [(i, [rng.uniform(-2, 2) for _ in range(8)]) for i in range(20)]
+    rows.append((20, [0.0] * 8))
+    df = spark.createDataFrame(rows, "id bigint, vector array<double>") \
+        .selectExpr("id", "cast(vector as array<float>) as vector")
+    inf, nan = float("inf"), float("nan")
+    base = [rng.uniform(-2, 2) for _ in range(8)]
+    queries = [[inf] + base[1:], [-inf] + base[1:], [nan] + base[1:],
+               [inf, -inf] + base[2:]]
+    for q in queries:
+        for metric in ("cosine", "dot", "euclidean"):
+            got = D.staged_score(df, "vector", q, metric, "s") \
+                .orderBy("id").select("s").collect()
+            ref = df.select("id", D.metric_score(
+                F.col("vector"), double_array_lit(q), metric).alias("s")) \
+                .orderBy("id").select("s").collect()
+            assert _same_bits([r.s for r in got], [r.s for r in ref]), \
+                (q, metric)
+    n2 = df.withColumn("_n2", D.doc_norm2("vector"))
+    names = [f"s{i}" for i in range(len(queries))]
+    got = D.staged_scores_batch(n2, "vector", queries, "cosine", names,
+                                norm2_col="_n2").orderBy("id").collect()
+    for name, q in zip(names, queries):
+        ref = df.select("id", D.metric_score(
+            F.col("vector"), double_array_lit(q), "cosine").alias("s")) \
+            .orderBy("id").collect()
+        assert _same_bits([r[name] for r in got], [r.s for r in ref]), q
+
+
+def test_staged_score_helper_column_collision_raises(spark):
+    """An input that already carries a helper column the cosine scorers
+    write must fail loudly, not lose the user's column."""
+    from velesdb_spark.functions import distance as D
+
+    df = spark.createDataFrame([(1, [1.0, 2.0])],
+                               "id bigint, vector array<float>")
+    q = [0.5, 0.25]
+    for helper in ("_dot", "_n2"):
+        with pytest.raises(ValueError, match=helper):
+            D.staged_score(df.withColumn(helper, F.lit(7)), "vector", q,
+                           "cosine")
+    n2 = df.withColumn("_docn2", D.doc_norm2("vector"))
+    with pytest.raises(ValueError, match="_dot"):
+        D.staged_score(n2.withColumn("_dot", F.lit(7)), "vector", q,
+                       "cosine", norm2_col="_docn2")
+    with pytest.raises(ValueError, match="_dots1"):
+        D.staged_scores_batch(n2.withColumn("_dots1", F.lit(7)), "vector",
+                              [q, q], "cosine", ["s0", "s1"],
+                              norm2_col="_docn2")
+    # a precomputed norm column named _n2 is the caller's, not a helper
+    kept = D.staged_score(df.withColumn("_n2", D.doc_norm2("vector")),
+                          "vector", q, "cosine", norm2_col="_n2")
+    assert kept.columns == ["id", "vector", "_n2", "score"]
+
+
+def test_rrf_on_input_with_rank_column(spark):
+    """with_rank replaces an existing _rank column (withColumn
+    semantics), so fusing a frame that already carries one neither
+    duplicates the column nor fails on an ambiguous reference."""
+    from velesdb_spark.functions.fusion import (fuse_hybrid_rrf, fuse_rrf,
+                                                with_rank)
+
+    res = spark.createDataFrame(
+        [("a", 1, 0.9, 99), ("a", 2, 0.5, 99), ("b", 2, 3.0, 99),
+         ("b", 3, 1.0, 99)],
+        "qid string, id bigint, score double, _rank int")
+    ranked = with_rank(res)
+    assert ranked.columns.count("_rank") == 1
+    assert sorted((r.qid, r.id, r._rank) for r in ranked.collect()) == [
+        ("a", 1, 0), ("a", 2, 1), ("b", 2, 0), ("b", 3, 1)]
+    got = {r.id: r.score for r in fuse_rrf(res).collect()}
+    ref = {r.id: r.score for r in fuse_rrf(res.drop("_rank")).collect()}
+    assert got == ref
+    assert got == pytest.approx({1: 1 / 61, 2: 1 / 62 + 1 / 61, 3: 1 / 62})
+    got = {r.id: r.score
+           for r in fuse_hybrid_rrf(res, {"a": 2.0}).collect()}
+    assert got == pytest.approx(
+        {1: 2.0 / 60, 2: 2.0 / 61 + 1.0 / 60, 3: 1.0 / 61})
+
+
+def test_fuse_hybrid_rrf_weighted_plan_identity(spark):
+    """The weighted hybrid RRF (Collection.hybrid_search) parses one SQL
+    expression; its analyzed plan is canonically the Column tree it
+    replaced: coalesce(map(...)[qid], 1.0) / (_rank + 60.0)."""
+    from velesdb_spark.functions.fusion import fuse_hybrid_rrf, with_rank
+
+    res = spark.createDataFrame(
+        [("v", 1, 0.5), ("v", 2, 0.7), ("t", 1, 3.0), ("t", 3, 1.0)],
+        "qid string, id bigint, score double")
+    weights = {"v": 0.75, "t": 0.25}
+    wmap = F.create_map(*[F.lit(x) for kv in weights.items() for x in kv])
+    wcol = F.coalesce(wmap[F.col("qid")], F.lit(1.0))
+    old = (with_rank(res).withColumn("_rrf", wcol / (F.col("_rank") + 60.0))
+           .groupBy("id").agg(F.sum("_rrf").alias("score")))
+    new = fuse_hybrid_rrf(res, weights)
+    canon = lambda d: (d._jdf.queryExecution().analyzed()
+                       .canonicalized().toString())
+    assert canon(new) == canon(old)
+    assert sorted(new.collect()) == sorted(old.collect())

@@ -24,13 +24,16 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from velesdb_spark.functions.arraylit import sql_ident
+
 __all__ = ["robust_outliers"]
 
 
 def _median(col: str, approx: bool, accuracy: int) -> F.Column:
     if approx:
-        return F.expr(f"percentile_approx({col}, 0.5, {accuracy})")
-    return F.expr(f"percentile({col}, 0.5)")
+        return F.expr(f"percentile_approx({sql_ident(col)}, 0.5, "
+                      f"{int(accuracy)})")
+    return F.expr(f"percentile({sql_ident(col)}, 0.5)")
 
 
 def robust_outliers(df: DataFrame, value_col: str, group_col: str,
@@ -42,6 +45,7 @@ def robust_outliers(df: DataFrame, value_col: str, group_col: str,
         raise ValueError(f"threshold must be positive, got {threshold}")
     from velesdb_spark.functions.staging import stage
 
+    val = F.col(sql_ident(value_col))
     # med (one row per group) feeds BOTH the MAD derivation and the
     # stats join; unstaged, Catalyst re-plans the exact-percentile
     # aggregate — a full shuffle of the measure column — once per
@@ -50,7 +54,7 @@ def robust_outliers(df: DataFrame, value_col: str, group_col: str,
     med = stage(df.groupBy(group_col)
                 .agg(_median(value_col, approx, accuracy).alias("med")))
     mad = (df.join(med, group_col)
-           .withColumn("_ad", F.abs(F.col(value_col) - F.col("med")))
+           .withColumn("_ad", F.abs(val - F.col("med")))
            .groupBy(group_col)
            .agg(_median("_ad", approx, accuracy).alias("mad")))
     stats = stage(med.join(mad, group_col))
@@ -58,9 +62,9 @@ def robust_outliers(df: DataFrame, value_col: str, group_col: str,
               .withColumn(
                   "score",
                   F.when(F.col("mad") > 0.0,
-                         F.abs(F.col(value_col) - F.col("med"))
+                         F.abs(val - F.col("med"))
                          / F.col("mad"))
                   .otherwise(F.when(
-                      F.abs(F.col(value_col) - F.col("med")) > 0.0,
+                      F.abs(val - F.col("med")) > 0.0,
                       F.lit(float("inf"))).otherwise(F.lit(0.0)))))
     return scored.filter(F.col("score") > float(threshold))

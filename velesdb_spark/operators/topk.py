@@ -27,6 +27,7 @@ from typing import Iterable, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from velesdb_spark.functions.arraylit import sql_ident
 from velesdb_spark.functions.distance import higher_is_better, metric_score
 
 DEFAULT_K = 10
@@ -196,25 +197,14 @@ def knn_batch(df: DataFrame, queries: Iterable[tuple[int, Sequence[float]]],
         scored = staged_scores_batch(
             scored, vector_col, [vec for _, vec in qrows], metric,
             [name for _, name in cols], norm2_col=n2col)
-        from velesdb_spark.functions.distance import _ident_sql
-
-        idsql = _ident_sql(id_col)
-        if idsql is not None:
-            # one parsed expression for the (qid, score) struct array —
-            # the F.struct/F.lit loop costs ~8 py4j round-trips per query
-            pairs_sql = "array(" + ",".join(
-                f"named_struct('qid', {int(qid)}L, 'score', `{name}`)"
-                for qid, name in cols) + ")"
-            long = (scored.selectExpr(idsql, f"explode({pairs_sql}) AS _p")
-                    .selectExpr("_p.qid AS qid", idsql,
-                                "_p.score AS score"))
-        else:
-            pairs = F.array(*[
-                F.struct(F.lit(qid).cast("bigint").alias("qid"),
-                         F.col(name).alias("score")) for qid, name in cols])
-            long = (scored.select(F.col(id_col), F.explode(pairs).alias("_p"))
-                    .select(F.col("_p.qid").alias("qid"), id_col,
-                            F.col("_p.score").alias("score")))
+        # one parsed expression for the (qid, score) struct array — the
+        # F.struct/F.lit loop costs ~8 py4j round-trips per query
+        idsql = sql_ident(id_col)
+        pairs_sql = "array(" + ",".join(
+            f"named_struct('qid', {int(qid)}L, 'score', {sql_ident(name)})"
+            for qid, name in cols) + ")"
+        long = (scored.selectExpr(idsql, f"explode({pairs_sql}) AS _p")
+                .selectExpr("_p.qid AS qid", idsql, "_p.score AS score"))
         w = Window.partitionBy("qid") \
             .orderBy(*_best_order("score", metric, id_col))
         return (long.withColumn("_rn", F.row_number().over(w))

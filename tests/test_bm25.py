@@ -201,52 +201,81 @@ def _full_rebuild_scores(spark, docs_dict, query):
 
 
 def test_incremental_index_matches_rebuild(spark, corpus, tmp_path):
-    """Durable snapshot+delta index: every upsert/delete/compact step must
-    score identically to a full rebuild over the same logical corpus."""
+    """Durable snapshot+delta index: every upsert/delete/compact/vacuum
+    step must score identically to a full rebuild over the same logical
+    corpus — starting from a built snapshot, and from an empty directory
+    (no snapshot until the first compact)."""
+    import os
+
     from velesdb_spark.functions.bm25 import IncrementalBm25Index
+    from velesdb_spark.storage import read_manifest
 
     df, docs = corpus
-    path = str(tmp_path / "bm25_inc")
-    idx = IncrementalBm25Index.build(df, path)
     q = "rust programming"
+    rebuilt = {}  # both inputs pass through the same logical corpora
 
-    def check(state):
+    def check(idx, state):
         got = {r.id: r._bm25_score for r in idx.scores(q).collect()}
-        want = _full_rebuild_scores(spark, state, q)
+        key = tuple(sorted(state.items()))
+        if key not in rebuilt:
+            rebuilt[key] = _full_rebuild_scores(spark, state, q)
+        want = rebuilt[key]
         assert set(got) == set(want)
         for i in got:
             assert got[i] == pytest.approx(want[i], rel=1e-9)
 
-    state = dict(docs)
-    check(state)
+    for start in ("build", "empty"):
+        path = str(tmp_path / f"bm25_inc_{start}")
+        if start == "build":
+            idx = IncrementalBm25Index.build(df, path)
+            state = dict(docs)
+        else:
+            idx = IncrementalBm25Index(spark, path)
+            state = {}
+            check(idx, state)
+            idx.upsert_docs(df)
+            state.update(docs)
+        check(idx, state)
 
-    # upsert: replace doc 2, add doc 8
-    batch = [(2, "rust data pipelines"), (8, "go and rust tooling")]
-    idx.upsert_docs(spark.createDataFrame(batch, "id bigint, text string"))
-    state.update(dict(batch))
-    check(state)
+        # upsert: replace doc 2, add doc 8
+        batch = [(2, "rust data pipelines"), (8, "go and rust tooling")]
+        idx.upsert_docs(spark.createDataFrame(batch, "id bigint, text string"))
+        state.update(dict(batch))
+        check(idx, state)
 
-    # upsert replacing a doc with empty text drops it from the index
-    idx.upsert_docs(spark.createDataFrame([(4, "")], "id bigint, text string"))
-    state[4] = ""
-    check(state)
+        # upsert replacing a doc with empty text drops it from the index
+        idx.upsert_docs(spark.createDataFrame([(4, "")], "id bigint, text string"))
+        state[4] = ""
+        check(idx, state)
 
-    # delete
-    idx.delete_docs([1])
-    del state[1]
-    check(state)
+        # delete
+        idx.delete_docs([1])
+        del state[1]
+        check(idx, state)
 
-    # compact folds the log; scores unchanged, log truncated
-    idx.compact()
-    from velesdb_spark.storage import read_manifest
-    m = read_manifest(path)
-    assert m["segments"] == [] and m["snapshot"].endswith("v=2")
-    check(state)
+        # compact folds the log; scores unchanged, log truncated
+        idx.compact()
+        m = read_manifest(path)
+        live = "v=2" if start == "build" else "v=1"
+        assert m["segments"] == [] and m["snapshot"].endswith(live)
+        check(idx, state)
 
-    # reopen from disk
-    idx2 = IncrementalBm25Index(spark, path)
-    got = {r.id: r._bm25_score for r in idx2.scores(q).collect()}
-    assert got == {r.id: r._bm25_score for r in idx.scores(q).collect()}
+        # reopen from disk
+        idx2 = IncrementalBm25Index(spark, path)
+        got = {r.id: r._bm25_score for r in idx2.scores(q).collect()}
+        assert got == {r.id: r._bm25_score for r in idx.scores(q).collect()}
+
+        # vacuum leaves only the live snapshot and no log segments; the
+        # reopened index still scores, and takes new upserts
+        idx2.vacuum()
+        assert os.listdir(os.path.join(path, "snapshot")) == [live]
+        assert os.listdir(os.path.join(path, "log")) == []
+        idx3 = IncrementalBm25Index(spark, path)
+        check(idx3, state)
+        idx3.upsert_docs(spark.createDataFrame(
+            [(9, "rust after vacuum")], "id bigint, text string"))
+        state[9] = "rust after vacuum"
+        check(idx3, state)
 
 
 def test_incremental_update_no_retokenize(spark, corpus, tmp_path):

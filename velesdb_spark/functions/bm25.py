@@ -12,17 +12,32 @@ bm25.rs:348-360).
 Scale design: the corpus statistics (postings tf, per-term df, doc lengths,
 N/avgdl) are DataFrames produced by explode + groupBy — the classic
 distributed inverted-index build, one shuffle each, all map-side combinable.
-A query is a tiny (terms × multiplicity) DataFrame broadcast against the
-postings; per-doc score is one partial aggregation. Nothing is collected to
-the driver except the optional top-k.
+A query's per-term IDF weights are folded in Python from a bounded df
+lookup; per-doc score is one partial aggregation over the postings filtered
+to the query's terms. Nothing corpus-sized is collected.
+
+Index lifecycle, each step written once:
+- compose: ``_compose`` folds a mutation batch into an index (postings and
+  doc lengths minus the shadowed docs by a broadcast anti join, union the
+  added rows; term df adjusted by arithmetic). Bm25Index.incremental_update
+  (Collection upserts/deletes) and IncrementalBm25Index.as_bm25 (the durable
+  snapshot + delta log) both call it;
+- persist: Bm25Index.save is the one snapshot writer and Bm25Index.load the
+  one reader, for saved indexes and durable snapshots alike;
+- log: segments, manifest, snapshot versions and vacuum are storage.py's
+  helpers, shared with LogStore.
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from velesdb_spark.functions.arraylit import sql_ident, sql_str
+from velesdb_spark.storage import (append_segment, commit_snapshot,
+                                   read_manifest, vacuum)
 
 K1 = 1.2
 B = 0.75
@@ -50,6 +65,15 @@ def tokenize_py(text: str) -> list[str]:
         if len(tok.encode("utf-8")) > 1:
             out.append(tok)
     return out
+
+
+def _query_bag(query: str) -> dict[str, int]:
+    """Query term → multiplicity, in first-occurrence order (duplicate
+    terms score multiply, bm25.rs:348-360; _scan_scores_sql sums its
+    per-term pieces in this order)."""
+    from collections import Counter
+
+    return Counter(tokenize_py(query))
 
 
 def term_bucket_expr(col: Column, n_buckets: int) -> Column:
@@ -127,16 +151,6 @@ class Bm25Index:
                                  .repartitionByRange(max(8, par // 4), "term")
                                  .sortWithinPartitions("term").cache())
 
-    def query_terms_df(self, query: str) -> DataFrame:
-        """Query token bag with multiplicities (duplicate terms multiply)."""
-        terms = tokenize_py(query)
-        counts: dict[str, int] = {}
-        for t in terms:
-            counts[t] = counts.get(t, 0) + 1
-        rows = [(t, c) for t, c in counts.items()] or []
-        return self.spark.createDataFrame(rows, "term string, qtf int") if rows else \
-            self.spark.createDataFrame([], "term string, qtf int")
-
     def _corpus_stats(self) -> tuple[int, float]:
         """(n_docs, avgdl), collected once per index instance. The
         reference keeps these as plain struct fields read per search
@@ -177,9 +191,7 @@ class Bm25Index:
         """
         import math
 
-        counts: dict[str, int] = {}
-        for t in tokenize_py(query):
-            counts[t] = counts.get(t, 0) + 1
+        counts = _query_bag(query)
         terms = list(counts)
         if not terms:
             return self._empty_scores()
@@ -237,16 +249,17 @@ class Bm25Index:
                            deleted_ids=None,
                            text_col: str = "text") -> "Bm25Index":
         """Composed index after an upsert/delete batch WITHOUT re-tokenizing
-        the corpus: only ``new_docs`` go through tokenize/explode; the
-        existing postings/doc_lengths (cached by the collection) are reused
-        behind a broadcast anti join on the mutated ids, and term df is
-        adjusted arithmetically. The in-memory twin of
-        IncrementalBm25Index.as_bm25()."""
+        the corpus: only ``new_docs`` go through tokenize/explode, and
+        _compose folds them onto the existing postings/doc_lengths (cached
+        by the collection). Corpus stats re-aggregate the composed doc
+        lengths: a narrow, map-combinable aggregate over the mostly cached
+        set."""
         spark = self.spark
         shadow_parts = []
-        delta = None
+        add_postings = add_dl = None
         if new_docs is not None:
             delta = Bm25Index(new_docs, id_col=self.id_col, text_col=text_col)
+            add_postings, add_dl = delta.postings, delta.doc_lengths
             shadow_parts.append(new_docs.select(
                 F.col(self.id_col).alias("_doc_id")))
         if deleted_ids:
@@ -257,76 +270,48 @@ class Bm25Index:
         shadowed = shadow_parts[0]
         for p in shadow_parts[1:]:
             shadowed = shadowed.unionByName(p)
-        shadowed = shadowed.distinct()
-
-        out = Bm25Index.__new__(Bm25Index)
-        out.id_col = self.id_col
-        out.spark = spark
-        kept_postings = self.postings.join(
-            F.broadcast(shadowed), "_doc_id", "left_anti")
-        kept_dl = self.doc_lengths.join(
-            F.broadcast(shadowed), "_doc_id", "left_anti")
-        rem_tdf = (self.postings
-                   .join(F.broadcast(shadowed), "_doc_id", "left_semi")
-                   .groupBy("term").agg(F.count("*").alias("_rem")))
-        if delta is not None:
-            delta_postings = delta.postings
-            if "_tb" in kept_postings.columns:
-                if self.term_buckets:
-                    # loaded (bucketed) index: compute the SAME bucket for
-                    # the delta rows so the union keeps the pruning column
-                    # (what as_bm25() does for log deltas)
-                    delta_postings = delta_postings.withColumn(
-                        "_tb", term_bucket_expr(F.col("term"),
-                                                self.term_buckets))
-                else:
-                    kept_postings = kept_postings.drop("_tb")
-            out.postings = kept_postings.unionByName(delta_postings)
-            out.doc_lengths = kept_dl.unionByName(delta.doc_lengths)
-            add_tdf = delta.term_df.withColumnRenamed("df", "_add")
-        else:
-            out.postings = kept_postings
-            out.doc_lengths = kept_dl
-            add_tdf = spark.createDataFrame([], "term string, _add bigint")
-        out.term_buckets = self.term_buckets
-        out.term_df = (
-            self.term_df.join(rem_tdf, "term", "full")
-            .join(add_tdf, "term", "full")
-            .select("term", (F.coalesce(F.col("df"), F.lit(0))
-                             - F.coalesce(F.col("_rem"), F.lit(0))
-                             + F.coalesce(F.col("_add"), F.lit(0))).alias("df"))
-            .filter(F.col("df") > 0))
-        # narrow map-combinable agg over the composed (mostly cached) dl set
+        out = _compose(self, shadowed.distinct(), add_postings, add_dl)
         out.stats = out.doc_lengths.agg(
             F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl"))
         return out
 
     def save(self, path: str, term_buckets: int = 64) -> str:
-        """Materialize the inverted index to parquet. Postings are written
-        bucketed by a hash of the term so a query's score join reads only
-        its terms' buckets (the 100 TB layout; locally the same files).
+        """Materialize the inverted index to parquet: the one snapshot
+        writer, for saved indexes and IncrementalBm25Index snapshots alike.
+        Postings are partitioned by a hash bucket of the term (``_tb``), so
+        a query's score join reads only its terms' buckets (the 100 TB
+        layout; locally the same files). Stats carry ``sum_dl`` so a durable
+        delta composes them arithmetically.
 
         The reference persists its index on flush (crud.rs flush →
         index/bm25.rs serialization); this is that, as columnar artifacts.
         """
         import json
-        import os
 
-        # persist the shared tokenize/explode lineage: term_df derives from
-        # postings and stats from doc_lengths — without this, the four
-        # writes would each re-scan and re-shuffle the whole corpus
-        postings = self.postings.persist()
+        # persist the shared lineage: term_df derives from postings and
+        # stats from doc_lengths — without this, the four writes would each
+        # re-scan and re-shuffle the whole corpus. A loaded or composed
+        # source may carry an old ``_tb``; it is re-bucketed here.
+        postings = self.postings.drop("_tb").persist()
         doc_lengths = self.doc_lengths.persist()
         try:
-            (postings
-             .withColumn("_tb", term_bucket_expr(F.col("term"), term_buckets))
+            # repartition on the bucket key before the partitionBy write:
+            # without it every upstream task writes a sliver into every
+            # bucket directory (buckets x tasks files — 256 at 8 buckets
+            # on local[32]); with it each bucket is one task's single
+            # well-sized file, and a query's per-term bucket read opens
+            # 1 file instead of tasks-many (guide §6 file sizing)
+            (postings.withColumn("_tb",
+                                 term_bucket_expr(F.col("term"), term_buckets))
+             .repartition(term_buckets, F.col("_tb"))
              .write.mode("overwrite").partitionBy("_tb")
              .parquet(f"{path}/postings"))
             doc_lengths.write.mode("overwrite").parquet(f"{path}/doc_lengths")
             postings.groupBy("term").agg(F.count("*").alias("df")) \
                 .write.mode("overwrite").parquet(f"{path}/term_df")
             doc_lengths.agg(
-                F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl")) \
+                F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl"),
+                F.sum("dl").alias("sum_dl")) \
                 .write.mode("overwrite").parquet(f"{path}/stats")
         finally:
             postings.unpersist()
@@ -340,7 +325,6 @@ class Bm25Index:
         """Open a saved index without recomputing corpus statistics. The
         bucket column rides along so scores() can prune partitions."""
         import json
-        import os
 
         idx = cls.__new__(cls)
         idx.id_col = id_col
@@ -358,27 +342,70 @@ class Bm25Index:
         return idx
 
 
+def _compose(base: Bm25Index, shadowed: DataFrame,
+             add_postings: DataFrame | None,
+             add_dl: DataFrame | None) -> Bm25Index:
+    """Fold one mutation batch into ``base``, lazily: the only BM25 delta
+    composition, shared by Bm25Index.incremental_update and
+    IncrementalBm25Index.as_bm25.
+
+    - postings and doc_lengths: the base minus the ``shadowed`` docs (a
+      broadcast anti join on ``_doc_id``, so the base is never shuffled),
+      union the added rows;
+    - term_df: base df − removed docs + added docs, by arithmetic instead
+      of a corpus re-aggregation.
+
+    ``add_postings`` (term, _doc_id, tf) gets the base's bucket column when
+    the base is bucketed, so the union keeps partition pruning. Corpus
+    stats are the caller's: the two callers have different inputs."""
+    out = Bm25Index.__new__(Bm25Index)
+    out.id_col, out.spark = base.id_col, base.spark
+    out.term_buckets = base.term_buckets
+    shadowed = F.broadcast(shadowed)
+    out.postings = base.postings.join(shadowed, "_doc_id", "left_anti")
+    out.doc_lengths = base.doc_lengths.join(shadowed, "_doc_id", "left_anti")
+    # df pieces are parsed expressions: one py4j call each, not a Column tree
+    rem_tdf = (base.postings.join(shadowed, "_doc_id", "left_semi")
+               .groupBy("term").agg(F.expr("count(*) AS _rem")))
+    term_df = base.term_df.join(rem_tdf, "term", "full")
+    df = "coalesce(df, 0) - coalesce(_rem, 0)"
+    if add_postings is not None:
+        if base.term_buckets:
+            add_postings = add_postings.withColumn(
+                "_tb", term_bucket_expr(F.col("term"), base.term_buckets))
+        out.postings = out.postings.unionByName(add_postings)
+        out.doc_lengths = out.doc_lengths.unionByName(add_dl)
+        add_tdf = add_postings.groupBy("term").agg(F.expr("count(*) AS _add"))
+        term_df = term_df.join(add_tdf, "term", "full")
+        df += " + coalesce(_add, 0)"
+    out.term_df = term_df.selectExpr("term", f"{df} AS df").filter("df > 0")
+    return out
+
+
 class IncrementalBm25Index:
-    """Incremental BM25 maintenance: snapshot postings + a postings delta
-    log, following the same manifest/segment/compaction protocol as
-    storage.LogStore (the reference updates its text index transactionally
-    per upsert — crud.rs:19-118; this is that contract at batch scale).
+    """Incremental BM25 maintenance: a snapshot index plus a postings
+    delta log on storage.py's segment/manifest protocol (the reference
+    updates its text index transactionally per upsert — crud.rs:19-118;
+    this is that contract at batch scale).
 
     - ``upsert_docs``/``delete_docs`` append one immutable log segment
       computed from ONLY the mutated docs (tokenize cost ∝ batch size,
       never corpus size — no full re-index per upsert→search cycle).
-    - Search composes the live view lazily: snapshot postings minus
-      shadowed docs, union the log's last-writer-wins postings; term df
-      and corpus stats are adjusted arithmetically from the (small) delta
-      instead of re-aggregated from the corpus. The snapshot is never
-      shuffled — shadowed-doc removal is a broadcast anti join.
-    - ``compact()`` folds the log into a new snapshot version and
-      truncates the log atomically (manifest rename is the commit point).
+    - Search composes the live view lazily with the same ``_compose`` as
+      Bm25Index.incremental_update: the snapshot (read by Bm25Index.load)
+      minus shadowed docs, union the log's last-writer-wins postings, term
+      df adjusted arithmetically. Only the corpus stats are this class's
+      own: the snapshot's n_docs and sum_dl adjusted by the delta, so a
+      search never rescans the snapshot's doc lengths.
+    - ``compact()`` writes the composed view as the next snapshot with
+      Bm25Index.save and truncates the log atomically (the manifest rename
+      is the commit point); ``vacuum()`` deletes what the manifest no
+      longer references.
 
-    Layout: MANIFEST.json, snapshot/v=N/{postings,doc_lengths,term_df,
-    stats}, log/NNNNNN.parquet with rows (_doc_id, term, tf, dl, _op,
-    _seq); a delete (or an upsert whose new text has no tokens) is a
-    single term=NULL tombstone row.
+    Layout: MANIFEST.json, snapshot/v=N/ (a Bm25Index.save directory),
+    log/NNNNNN.parquet with rows (_doc_id, term, tf, dl, _op, _seq); a
+    delete (or an upsert whose new text has no tokens) is a single
+    term=NULL tombstone row.
     """
 
     def __init__(self, spark, path: str, id_col: str = "id",
@@ -393,74 +420,15 @@ class IncrementalBm25Index:
     def build(cls, docs: DataFrame, path: str, id_col: str = "id",
               text_col: str = "text",
               term_buckets: int = 64) -> "IncrementalBm25Index":
-        """Full index build → snapshot v=1 with an empty log.
+        """Full index build → the first snapshot with an empty log.
         ``term_buckets`` sizes the postings partitioning (a query's score
         join reads only its terms' buckets); small corpora can use fewer
         to cut per-directory write overhead."""
-        idx = cls(docs.sparkSession, path, id_col, text_col)
-        idx.term_buckets = term_buckets
-        idx._write_snapshot(Bm25Index(docs, id_col=id_col, text_col=text_col),
-                            version=1, seq=0)
-        return idx
-
-    def _write_snapshot(self, src, version: int, seq: int) -> None:
-        import os
-
-        from velesdb_spark.storage import commit_manifest
-
-        snap = f"snapshot/v={version}"
-        base = os.path.join(self.path, snap)
-        buckets = getattr(self, "term_buckets", 64) or 64
-        src_postings = src.postings
-        if "_tb" in src_postings.columns:
-            src_postings = src_postings.drop("_tb")
-        postings = src_postings.persist()
-        doc_lengths = src.doc_lengths.persist()
-        try:
-            # repartition on the bucket key before the partitionBy write:
-            # without it every upstream task writes a sliver into every
-            # bucket directory (buckets x tasks files — 256 at 8 buckets
-            # on local[32]); with it each bucket is one task's single
-            # well-sized file, and a query's per-term bucket read opens
-            # 1 file instead of tasks-many (guide §6 file sizing)
-            (postings.withColumn("_tb",
-                                 term_bucket_expr(F.col("term"), buckets))
-             .repartition(buckets, F.col("_tb"))
-             .write.mode("overwrite").partitionBy("_tb")
-             .parquet(f"{base}/postings"))
-            doc_lengths.write.mode("overwrite").parquet(f"{base}/doc_lengths")
-            postings.groupBy("term").agg(F.count("*").alias("df")) \
-                .write.mode("overwrite").parquet(f"{base}/term_df")
-            # sum_dl rides along so stats compose arithmetically with deltas
-            doc_lengths.agg(
-                F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl"),
-                F.sum("dl").alias("sum_dl")) \
-                .write.mode("overwrite").parquet(f"{base}/stats")
-        finally:
-            postings.unpersist()
-            doc_lengths.unpersist()
-        commit_manifest(self.path, {"snapshot": snap, "segments": [],
-                                    "seq": seq, "term_buckets": buckets})
+        src = Bm25Index(docs, id_col=id_col, text_col=text_col)
+        commit_snapshot(path, lambda d: src.save(d, term_buckets))
+        return cls(docs.sparkSession, path, id_col, text_col)
 
     # ------------------------------------------------------------ writes
-    _LOG_SCHEMA = ("_doc_id bigint, term string, tf bigint, dl bigint, "
-                   "_op string, _seq bigint")
-
-    def _append_segment(self, rows: DataFrame) -> None:
-        import os
-
-        from velesdb_spark.storage import commit_manifest, read_manifest
-
-        os.makedirs(os.path.join(self.path, "log"), exist_ok=True)
-        m = read_manifest(self.path)
-        seq = m["seq"] + 1
-        seg = f"log/{seq:06d}.parquet"
-        rows.withColumn("_seq", F.lit(seq).cast("long")) \
-            .write.mode("overwrite").parquet(os.path.join(self.path, seg))
-        m["seq"] = seq
-        m["segments"] = m["segments"] + [seg]
-        commit_manifest(self.path, m)
-
     def upsert_docs(self, docs: DataFrame) -> "IncrementalBm25Index":
         """Append one postings-delta segment for ``docs`` (replaces any
         prior version of each doc). Tokenization touches only this batch."""
@@ -481,61 +449,45 @@ class IncrementalBm25Index:
                     F.lit(None).cast("long").alias("tf"),
                     F.lit(None).cast("long").alias("dl"),
                     F.lit("delete").alias("_op")))
-        self._append_segment(posting_rows.unionByName(empty_rows))
+        append_segment(self.path, posting_rows.unionByName(empty_rows), "_seq")
         return self
 
     def delete_docs(self, ids) -> "IncrementalBm25Index":
         rows = self.spark.createDataFrame(
             [(int(i), None, None, None, "delete") for i in ids],
             "_doc_id bigint, term string, tf bigint, dl bigint, _op string")
-        self._append_segment(rows)
+        append_segment(self.path, rows, "_seq")
         return self
 
     # ------------------------------------------------------------ reads
-    def _snapshot_frames(self, m):
-        import os
-
+    def _snapshot(self, m) -> Bm25Index:
         if m["snapshot"]:
-            base = os.path.join(self.path, m["snapshot"])
-            # _tb stays: scores() prunes snapshot partitions on it
-            return (self.spark.read.parquet(f"{base}/postings"),
-                    self.spark.read.parquet(f"{base}/doc_lengths"),
-                    self.spark.read.parquet(f"{base}/term_df"),
-                    self.spark.read.parquet(f"{base}/stats"))
+            return Bm25Index.load(
+                self.spark, os.path.join(self.path, m["snapshot"]), self.id_col)
+        # opened on a directory with no snapshot yet: an empty index
+        idx = Bm25Index.__new__(Bm25Index)
+        idx.id_col, idx.spark = self.id_col, self.spark
         empty = self.spark.createDataFrame
-        return (empty([], "term string, _doc_id bigint, tf bigint"),
-                empty([], "_doc_id bigint, dl bigint"),
-                empty([], "term string, df bigint"),
-                empty([(0, 0.0, 0)], "n_docs bigint, avgdl double, sum_dl bigint"))
+        idx.postings = empty([], "term string, _doc_id bigint, tf bigint")
+        idx.doc_lengths = empty([], "_doc_id bigint, dl bigint")
+        idx.term_df = empty([], "term string, df bigint")
+        idx.stats = empty([(0, 0.0, 0)],
+                          "n_docs bigint, avgdl double, sum_dl bigint")
+        return idx
 
     def as_bm25(self) -> Bm25Index:
         """Compose the live index view as a Bm25Index (same scores/search).
 
-        Plan shape: snapshot postings/doc_lengths anti-joined against the
-        (small, broadcast) shadowed-doc set ∪ the log's latest postings;
-        term_df and stats adjusted by delta arithmetic — no corpus-wide
-        re-aggregation, no tokenization anywhere."""
+        Plan shape: _compose over the snapshot and the log's latest
+        postings; stats are the snapshot's adjusted by the removed and
+        added doc lengths — no corpus-wide re-aggregation, no tokenization
+        anywhere."""
         from pyspark.sql import Window
 
-        from velesdb_spark.storage import read_manifest
-
-        import os
-
         m = read_manifest(self.path)
-        snap_postings, snap_dl, snap_tdf, snap_stats = self._snapshot_frames(m)
-        buckets = m.get("term_buckets")
-        idx = Bm25Index.__new__(Bm25Index)
-        idx.id_col = self.id_col
-        idx.spark = self.spark
-        idx.term_buckets = buckets
-        if buckets is None and "_tb" in snap_postings.columns:
-            snap_postings = snap_postings.drop("_tb")  # pre-meta layout
+        snap = self._snapshot(m)
         if not m["segments"]:
-            idx.postings = snap_postings
-            idx.doc_lengths = snap_dl
-            idx.term_df = snap_tdf
-            idx.stats = snap_stats.select("n_docs", "avgdl")
-            return idx
+            return snap
         log = self.spark.read.parquet(
             *[os.path.join(self.path, s) for s in m["segments"]])
         # last-writer-wins per doc: all postings rows of the winning seq
@@ -544,39 +496,17 @@ class IncrementalBm25Index:
                   .filter(F.col("_seq") == F.col("_max_seq")))
         live = latest.filter(F.col("_op") != "delete")
         shadowed = log.select("_doc_id").distinct()
-        add_postings = live.select("term", "_doc_id", "tf")
-        if buckets is not None:
-            # delta rows get the same bucket column so the composed frame
-            # stays uniformly bucketed (union requires matching schemas)
-            add_postings = add_postings.withColumn(
-                "_tb", term_bucket_expr(F.col("term"), buckets))
         add_dl = live.select("_doc_id", "dl").distinct()
-        idx.postings = snap_postings.join(
-            F.broadcast(shadowed), "_doc_id", "left_anti") \
-            .unionByName(add_postings)
-        idx.doc_lengths = snap_dl.join(
-            F.broadcast(shadowed), "_doc_id", "left_anti") \
-            .unionByName(add_dl)
-        # term df adjustment: -1 per (removed snapshot doc containing term),
-        # +1 per (added live doc containing term)
-        rem_tdf = (snap_postings
-                   .join(F.broadcast(shadowed), "_doc_id", "left_semi")
-                   .groupBy("term").agg(F.count("*").alias("_rem")))
-        add_tdf = add_postings.groupBy("term").agg(F.count("*").alias("_add"))
-        idx.term_df = (
-            snap_tdf.join(rem_tdf, "term", "full")
-            .join(add_tdf, "term", "full")
-            .select("term", (F.coalesce(F.col("df"), F.lit(0))
-                             - F.coalesce(F.col("_rem"), F.lit(0))
-                             + F.coalesce(F.col("_add"), F.lit(0))).alias("df"))
-            .filter(F.col("df") > 0))
+        idx = _compose(snap, shadowed, live.select("term", "_doc_id", "tf"),
+                       add_dl)
         # corpus stats adjustment (map-combinable aggs over narrow columns)
-        rem_stats = (snap_dl.join(F.broadcast(shadowed), "_doc_id", "left_semi")
+        rem_stats = (snap.doc_lengths.join(F.broadcast(shadowed), "_doc_id",
+                                           "left_semi")
                      .agg(F.count("*").alias("_rn"),
                           F.coalesce(F.sum("dl"), F.lit(0)).alias("_rs")))
         add_stats = add_dl.agg(F.count("*").alias("_an"),
                                F.coalesce(F.sum("dl"), F.lit(0)).alias("_as"))
-        idx.stats = (snap_stats.crossJoin(rem_stats).crossJoin(add_stats)
+        idx.stats = (snap.stats.crossJoin(rem_stats).crossJoin(add_stats)
                      .select(
                          (F.col("n_docs") - F.col("_rn") + F.col("_an"))
                          .alias("n_docs"),
@@ -594,37 +524,16 @@ class IncrementalBm25Index:
     # ------------------------------------------------------------ maintenance
     def compact(self) -> None:
         """Fold the delta log into a new snapshot version and truncate the
-        log; superseded versions stay until vacuum()."""
-        from velesdb_spark.storage import read_manifest
-
-        m = read_manifest(self.path)
-        if not m["segments"]:
+        log; superseded versions stay until vacuum(). The new snapshot
+        keeps the current bucket count (64 when there is no snapshot)."""
+        if not read_manifest(self.path)["segments"]:
             return
-        if m.get("term_buckets"):
-            self.term_buckets = m["term_buckets"]  # keep the built layout
-        cur = int(m["snapshot"].rsplit("=", 1)[1]) if m["snapshot"] else 0
-        self._write_snapshot(self.as_bm25(), version=cur + 1, seq=m["seq"])
+        src = self.as_bm25()
+        commit_snapshot(self.path,
+                        lambda d: src.save(d, src.term_buckets or 64))
 
     def vacuum(self) -> None:
-        import os
-        import shutil
-
-        from velesdb_spark.storage import read_manifest
-
-        m = read_manifest(self.path)
-        snapdir = os.path.join(self.path, "snapshot")
-        live = os.path.basename(m["snapshot"]) if m["snapshot"] else None
-        if os.path.isdir(snapdir):
-            for v in os.listdir(snapdir):
-                if v != live:
-                    shutil.rmtree(os.path.join(snapdir, v))
-        live_segs = {os.path.basename(s) for s in m["segments"]}
-        logdir = os.path.join(self.path, "log")
-        if os.path.isdir(logdir):
-            for s in os.listdir(logdir):
-                if s not in live_segs:
-                    seg = os.path.join(logdir, s)
-                    shutil.rmtree(seg) if os.path.isdir(seg) else os.remove(seg)
+        vacuum(self.path)
 
 
 def bm25_scan_scores(docs: DataFrame, query: str, id_col: str = "id",
@@ -640,9 +549,7 @@ def bm25_scan_scores(docs: DataFrame, query: str, id_col: str = "id",
     inverted-index build exactly like the reference's add-time indexing
     (index/bm25.rs add/search split).
     """
-    counts: dict[str, int] = {}
-    for t in tokenize_py(query):
-        counts[t] = counts.get(t, 0) + 1
+    counts = _query_bag(query)
     if not counts:
         return docs.select(F.col(sql_ident(id_col)),
                            F.lit(0.0).alias("_bm25_score")).limit(0)
@@ -724,8 +631,3 @@ def bm25_scan_search(docs: DataFrame, query: str, k: int = 10,
     return (bm25_scan_scores(docs, query, id_col, text_col)
             .orderBy(F.desc("_bm25_score"), F.asc(id_col)).limit(k))
 
-
-def bm25_score_df(docs: DataFrame, query: str, id_col: str = "id",
-                  text_col: str = "text") -> DataFrame:
-    """One-shot convenience: scan-path scores (no index build)."""
-    return bm25_scan_scores(docs, query, id_col=id_col, text_col=text_col)

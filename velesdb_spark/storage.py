@@ -20,6 +20,12 @@ flush in collection/core/crud.rs:19-118) — onto Spark-native primitives:
   directories remain on disk until vacuum() so readers holding the
   previous manifest stay consistent
 
+The protocol lives in the module-level helpers ``read_manifest``,
+``commit_manifest``, ``append_segment``, ``commit_snapshot`` and ``vacuum``.
+LogStore and the incremental BM25 postings log
+(functions/bm25.py IncrementalBm25Index) both call them, so the two logs
+share one segment layout, one commit point and one vacuum.
+
 Single-writer by design, matching the reference's single-process log store.
 """
 
@@ -28,7 +34,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
-from typing import Optional, Sequence
+from typing import Callable, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -38,9 +44,7 @@ _SEQ = "_veles_seq"
 
 
 def read_manifest(path: str) -> dict:
-    """Load a log-store manifest; empty-state default when absent. Shared
-    by LogStore and the incremental BM25 postings log (functions/bm25.py),
-    which follow the same segment/manifest/compaction protocol."""
+    """Load a log-store manifest; empty-state default when absent."""
     try:
         with open(os.path.join(path, "MANIFEST.json")) as f:
             return json.load(f)
@@ -57,6 +61,53 @@ def commit_manifest(path: str, m: dict) -> None:
     os.replace(tmp, target)  # atomic commit point
 
 
+def append_segment(path: str, df: DataFrame, seq_col: str,
+                   options: Optional[dict] = None) -> None:
+    """Write ``df`` as the next immutable log segment, tagged with its
+    sequence number in ``seq_col``, and commit it to the manifest.
+    ``options`` are parquet writer options."""
+    os.makedirs(os.path.join(path, "log"), exist_ok=True)
+    m = read_manifest(path)
+    seq = m["seq"] + 1
+    seg = f"log/{seq:06d}.parquet"
+    df.withColumn(seq_col, F.lit(seq).cast("long")) \
+        .write.mode("overwrite").options(**(options or {})) \
+        .parquet(os.path.join(path, seg))
+    m["seq"] = seq
+    m["segments"] = m["segments"] + [seg]
+    commit_manifest(path, m)
+
+
+def commit_snapshot(path: str, write: Callable[[str], None]) -> None:
+    """Write the next snapshot version with ``write(directory)``, then
+    commit a manifest that pins it with an empty log."""
+    m = read_manifest(path)
+    cur = int(m["snapshot"].rsplit("=", 1)[1]) if m["snapshot"] else 0
+    snap = f"snapshot/v={cur + 1}"
+    write(os.path.join(path, snap))
+    commit_manifest(path, {"snapshot": snap, "segments": [], "seq": m["seq"]})
+
+
+def vacuum(path: str) -> None:
+    """Remove snapshot versions and log segments no longer referenced by
+    the manifest (safe once no reader holds an older manifest)."""
+    m = read_manifest(path)
+    snapdir = os.path.join(path, "snapshot")
+    live_snap = os.path.basename(m["snapshot"]) if m["snapshot"] else None
+    if os.path.isdir(snapdir):
+        for v in os.listdir(snapdir):
+            if v != live_snap:
+                shutil.rmtree(os.path.join(snapdir, v))
+    live_segs = {os.path.basename(s) for s in m["segments"]}
+    logdir = os.path.join(path, "log")
+    if not os.path.isdir(logdir):
+        return
+    for s in os.listdir(logdir):
+        if s not in live_segs:
+            seg = os.path.join(logdir, s)
+            shutil.rmtree(seg) if os.path.isdir(seg) else os.remove(seg)
+
+
 class LogStore:
     def __init__(self, spark: SparkSession, path: str, id_col: str = "id"):
         # NO filesystem side effects here: a store handle may be created
@@ -66,37 +117,17 @@ class LogStore:
         self.path = path
         self.id_col = id_col
 
-    # ------------------------------------------------------------ manifest
-    @property
-    def _manifest_path(self) -> str:
-        return os.path.join(self.path, "MANIFEST.json")
-
-    def _read_manifest(self) -> dict:
-        return read_manifest(self.path)
-
-    def _commit_manifest(self, m: dict) -> None:
-        commit_manifest(self.path, m)
-
     def exists(self) -> bool:
-        return os.path.exists(self._manifest_path)
+        return os.path.exists(os.path.join(self.path, "MANIFEST.json"))
 
     # ------------------------------------------------------------ writes
     def _append_segment(self, df: DataFrame, op: str) -> None:
-        os.makedirs(os.path.join(self.path, "log"), exist_ok=True)
-        m = self._read_manifest()
-        seq = m["seq"] + 1
-        seg = f"log/{seq:06d}.parquet"
-        tagged = df.withColumn(_OP, F.lit(op)).withColumn(
-            _SEQ, F.lit(seq).cast("long"))
         # parquet-native row-group bloom filter on the key column: point
         # lookups over the log prune row groups without an engine-side
         # structure (pairs with functions/bloom.py's driver-side filter)
-        tagged.write.mode("overwrite") \
-            .option(f"parquet.bloom.filter.enabled#{self.id_col}", "true") \
-            .parquet(os.path.join(self.path, seg))
-        m["seq"] = seq
-        m["segments"] = m["segments"] + [seg]
-        self._commit_manifest(m)
+        append_segment(
+            self.path, df.withColumn(_OP, F.lit(op)), _SEQ,
+            {f"parquet.bloom.filter.enabled#{self.id_col}": "true"})
 
     def append_upsert(self, df: DataFrame) -> None:
         """One immutable log segment per batch. Within a batch, ids are
@@ -116,7 +147,7 @@ class LogStore:
         Plan shape at scale: the snapshot scan is untouched except one
         left_anti join against the (small) shadowed-id set; the window
         resolution runs on the log only. No full-table shuffle."""
-        m = self._read_manifest()
+        m = read_manifest(self.path)
         snap = None
         if m["snapshot"]:
             snap = self.spark.read.parquet(
@@ -144,28 +175,7 @@ class LogStore:
         df = self.read()
         if df is None:
             return
-        m = self._read_manifest()
-        cur = int(m["snapshot"].rsplit("=", 1)[1]) if m["snapshot"] else 0
-        new = f"snapshot/v={cur + 1}"
-        df.write.mode("overwrite").parquet(os.path.join(self.path, new))
-        self._commit_manifest(
-            {"snapshot": new, "segments": [], "seq": m["seq"]})
+        commit_snapshot(self.path, df.write.mode("overwrite").parquet)
 
     def vacuum(self) -> None:
-        """Remove snapshot versions and log segments no longer referenced
-        by the manifest (safe once no reader holds an older manifest)."""
-        m = self._read_manifest()
-        snapdir = os.path.join(self.path, "snapshot")
-        live_snap = os.path.basename(m["snapshot"]) if m["snapshot"] else None
-        if os.path.isdir(snapdir):
-            for v in os.listdir(snapdir):
-                if v != live_snap:
-                    shutil.rmtree(os.path.join(snapdir, v))
-        live_segs = {os.path.basename(s) for s in m["segments"]}
-        logdir = os.path.join(self.path, "log")
-        if not os.path.isdir(logdir):
-            return
-        for s in os.listdir(logdir):
-            if s not in live_segs:
-                seg = os.path.join(logdir, s)
-                shutil.rmtree(seg) if os.path.isdir(seg) else os.remove(seg)
+        vacuum(self.path)
